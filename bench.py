@@ -438,8 +438,7 @@ def _ann_prod_queries():
 
     def semdedup(spark, sf_dir):
         return similarity.semantic_dedup_pairs(
-            _normed(spark, sf_dir, "semantic_dedup_prod"),
-            persist_scope="semantic_dedup_prod",
+            _normed(spark, sf_dir, "semantic_dedup_prod")
         )
 
     return {

@@ -179,9 +179,9 @@ SEMANTIC_MIN_RECALL = 0.45
 def d_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding near-dup pairs via LSH buckets — the production twin
     of ``d_embedding_dedup`` (whose all-pairs broadcast join is the
-    verification baseline, quadratic in corpus size). Candidates come
-    from a (table, bucket) shuffle self-join over id-only postings, so
-    the shape holds at billions of vectors. Oracle-hardened: the exact
+    verification baseline, quadratic in corpus size). Candidates are
+    grouped by one (table, bucket) shuffle and rescored inside each
+    bucket, so the shape holds at billions of vectors. Oracle-hardened: the exact
     pair count is computed cross-engine (DuckDB runs the same all-pairs
     SQL), plus a recall tripwire of the LSH subset against it."""
     emb = managed_persist(

@@ -3562,7 +3562,6 @@ def stream_cochran_q(
 def stream_ann_postings(
     emb: DataFrame,
     state_view: str = "ann_postings_state",
-    signatures: str = "arrow",
 ):
     """Continuously-maintained LSH postings table — the INCREMENTAL arm
     of the materialized ANN index (operators/ann_index.py): as new
@@ -3573,24 +3572,16 @@ def stream_ann_postings(
     deterministic function of its embedding, so re-delivered rows
     dedupe to the identical posting.
 
-    ``signatures``: 'arrow' (default — the production path; numpy's
-    batch-shaped BLAS kernels can flip a NEAR-ZERO projection's sign
-    across different batch splits, which perturbs bucket membership
-    only and never scored pair values) or 'fold' (the pure-SQL
-    per-row fold — bit-deterministic for ANY chunking; the lockstep
-    test uses it so stream == batch is exact).  Batch twin:
-    ``operators.similarity.lsh_signatures*`` over the full table —
-    the postings arm of the s_knn_lsh serving path.
+    Signatures come from ``operators.similarity.lsh_signatures_arrow``,
+    bit-identical to the SQL fold for ANY micro-batch chunking, so the
+    streamed postings equal a batch build over the full table exactly
+    — the postings arm of the s_knn_lsh serving path.
     """
-    from locopy_spark.operators.similarity import (
-        lsh_signatures,
-        lsh_signatures_arrow,
-    )
+    from locopy_spark.operators.similarity import lsh_signatures_arrow
 
     spark = emb.sparkSession
     empty = spark.createDataFrame([], "vec_id long, table int, bucket long")
     empty.createOrReplaceGlobalTempView(state_view)
-    sig_fn = lsh_signatures_arrow if signatures == "arrow" else lsh_signatures
 
     def step(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -3598,7 +3589,7 @@ def stream_ann_postings(
         s = batch_df.sparkSession
         merged = (
             s.table(f"global_temp.{state_view}")
-            .unionByName(sig_fn(batch_df))
+            .unionByName(lsh_signatures_arrow(batch_df))
             .dropDuplicates(["vec_id", "table"])
             .localCheckpoint()
         )

@@ -2,8 +2,9 @@
 
 Parity targets: reference locopy/utility.py:49-537. The file-shaping
 utilities (split/compress/concatenate) exist here for API parity on
-local files, but the Spark-first equivalents live in
-``locopy_spark.sources.files`` — on a cluster you shape files by
+local files, but the Spark-first equivalent is the write itself —
+``locopy_spark.sources.unload.unload`` (``splits=``, ``compression=``;
+``splits=1`` concatenates): on a cluster you shape files by
 controlling write partitioning and codecs, not by re-reading bytes.
 """
 

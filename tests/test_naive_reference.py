@@ -620,6 +620,32 @@ def test_kcore_vs_naive_peeling(spark, tmp_path):
     assert got2 == want
 
 
+def test_kcore_empty_edges_matches_oracle(spark, tmp_path):
+    """An edge-free co-purchase graph (every basket holds one part, and
+    a fully empty lineitem) gives the same report on both engines:
+    ``KCORE_ITERS + 1`` zero-count rows whose ``k`` is NULL."""
+    import duckdb
+
+    from locopy_spark.queries.mining import KCORE_ITERS, _kcore_oracle, q_kcore
+
+    want = [(i, None, 0, 0) for i in range(KCORE_ITERS + 1)]
+    for name, rows in (("single", [(o, o % 7) for o in range(20)]), ("empty", [])):
+        d = tmp_path / name
+        d.mkdir()
+        _write(spark, d, "lineitem", rows, "l_orderkey long, l_partkey long")
+        got = [tuple(x) for x in q_kcore(spark, str(d)).collect()]
+        con = duckdb.connect()
+        try:
+            con.execute(
+                "CREATE VIEW lineitem AS SELECT * FROM "
+                f"'{d / 'lineitem.parquet'}/*.parquet'"
+            )
+            oracle = [tuple(x) for x in con.execute(_kcore_oracle()).fetchall()]
+        finally:
+            con.close()
+        assert got == oracle == want, name
+
+
 def test_pattern_negation_vs_naive_scan(spark, tmp_path):
     """Clean-path conversion equals a per-user brute-force scan with
     explicit strictly-after minima, including same-microsecond ties."""

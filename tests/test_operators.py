@@ -259,6 +259,31 @@ def test_global_ranking_matches_window(spark, sf_dir):
     assert dist_t == single_t
 
 
+def test_global_row_number_total_both_arms(spark, sf_dir):
+    """``_return_total`` gives the row count from the ranked frame on
+    both arms, and NULL on empty input; the bounded arm's total must
+    not re-scan the input (it reads the window's own frame)."""
+    from locopy_spark.operators.ranking import global_row_number
+    from locopy_spark.sources.tables import load_table
+
+    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
+    n = o.count()
+    order = ["o_totalprice", "o_orderkey"]
+    for bounded in (False, True):
+        out, total = global_row_number(
+            o, order, _return_total=True, bounded=bounded
+        )
+        assert total.collect()[0]["__total"] == n
+        assert out.agg(F.max("rn")).collect()[0][0] == n
+        if bounded:
+            plan = total._jdf.queryExecution().analyzed().toString()
+            assert "Window" in plan
+        _, empty = global_row_number(
+            o.limit(0), order, _return_total=True, bounded=bounded
+        )
+        assert [tuple(r) for r in empty.collect()] == [(None,)]
+
+
 def test_feature_extract_histogram_exact(spark):
     """mapInPandas feature vector == pure-Python byte histogram."""
     from collections import Counter

@@ -407,21 +407,129 @@ def test_phash_bands_arrow_equals_sql(spark, sf_dir):
     assert a == b and a
 
 
+def _adversarial_lsh_rows(n: int = 500, dim: int = 64, seed: int = 11):
+    """float32 vectors whose projection onto one plane (t < 8, p < 5 —
+    shared by the 6×8 and 5×24 banks) is an exact zero or a few ulp of
+    double off zero, so its sign depends on the summation order."""
+    import numpy as np
+
+    from locopy_spark.operators.similarity import hyperplane_signs
+
+    rng = np.random.default_rng(seed)
+    planes = [
+        np.array(row, dtype=np.float64)
+        for t in range(8)
+        for row in hyperplane_signs(5, dim, t)
+    ]
+    out = []
+    for r in range(n):
+        s = planes[r % len(planes)]
+        x = np.zeros(dim)  # the products v_i * s_i
+        kind = r % 3
+        if kind == 0:
+            # products cancel pairwise: exact sum 0, but the fold's
+            # partial sums round on the way there
+            perm = rng.permutation(dim)
+            a = rng.standard_normal(dim // 2).astype(np.float32)
+            x[perm[: dim // 2]] = a
+            x[perm[dim // 2 :]] = -a
+        elif kind == 1:
+            # big terms cancel around tiny ones the fold absorbs
+            idx = np.sort(rng.choice(dim, 6, replace=False))
+            big = np.float32(rng.uniform(0.5, 2.0))
+            tiny = [
+                float(rng.choice([-1, 1])) * 2.0 ** -int(rng.integers(56, 70))
+                for _ in range(4)
+            ]
+            x[idx] = [big, *tiny, -big]
+        else:
+            # random head; the last three terms cancel the fold's partial
+            # sum to within a few ulp (three float32 limbs hold 72 bits)
+            x[: dim - 3] = rng.standard_normal(dim - 3).astype(np.float32)
+            part = 0.0
+            for xi in x[: dim - 3]:
+                part += xi
+            for j in range(dim - 3, dim):
+                limb = np.float32(part)
+                x[j] = -limb
+                part -= float(limb)
+        v = (x * s).astype(np.float32)
+        out.append((1_000_000 + r, [float(e) for e in v]))
+    # degenerate rows: zero vector, NaN and ±inf projections
+    nan, inf = float("nan"), float("inf")
+    out.append((2_000_000, [0.0] * dim))
+    out.append((2_000_001, [nan] + [0.5] * (dim - 1)))
+    out.append((2_000_002, [inf] + [-0.25] * (dim - 1)))
+    out.append((2_000_003, [inf, -inf] + [1.0] * (dim - 2)))
+    return out
+
+
 def test_lsh_fold_arrow_equals_sql_fold(spark, sf_dir):
-    """The Arrow fold-order LSH signatures (r11, used by the
-    materialized index build) must equal the sequential SQL fold
-    bit-for-bit — the left-to-right accumulation reproduces its IEEE
-    addition order, so near-zero projections cannot flip."""
+    """The Arrow LSH kernel (matmul, with fold-order re-projection of
+    rows inside the rounding band) must equal the sequential SQL fold
+    bit-for-bit: random corpus vectors plus vectors built to have
+    exact-zero and few-ulp projections, at three Arrow batch sizes,
+    for the knn 6×8 geometry and the semantic-dedup 5×24 geometry
+    with the vector carried through."""
+    from fractions import Fraction
+
+    import numpy as np
+
     from locopy_spark.operators.similarity import (
+        hyperplane_signs,
         lsh_signatures,
-        lsh_signatures_fold_arrow,
+        lsh_signatures_arrow,
     )
     from locopy_spark.sources.tables import load_table
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    a = lsh_signatures(emb).orderBy("vec_id", "table").collect()
-    b = lsh_signatures_fold_arrow(emb).orderBy("vec_id", "table").collect()
-    assert [tuple(r) for r in a] == [tuple(r) for r in b] and a
+    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    adv_rows = _adversarial_lsh_rows()
+    df = emb.unionByName(spark.createDataFrame(adv_rows, emb.schema))
+
+    # the adversarial rows really are order-sensitive: on some the
+    # fold's rounding gives a different sign from the exact sum
+    flips = 0
+    for r, (_, v) in enumerate(adv_rows[:500]):
+        t, p = divmod(r % 40, 5)
+        s = hyperplane_signs(5, 64, t)[p]
+        fold = 0.0
+        for vi, si in zip(v, s):
+            fold += vi * si
+        exact = sum(Fraction(vi) * si for vi, si in zip(v, s))
+        flips += (fold > 0) != (exact > 0)
+    assert flips > 20
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    vectors = {r.vec_id: np.float32(r.embedding) for r in df.collect()}
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    try:
+        for n_planes, n_tables, carry in ((6, 8, False), (5, 24, True)):
+            geo = dict(n_planes=n_planes, n_tables=n_tables)
+            want = rows(lsh_signatures(df, **geo))
+            assert len(want) == len(vectors) * n_tables
+            for batch in (1, 37, 10000):
+                spark.conf.set(conf, str(batch))
+                got = lsh_signatures_arrow(df, **geo, include_vector=carry)
+                if carry:
+                    vec_type = got.schema["embedding"].dataType
+                    assert vec_type == df.schema["embedding"].dataType
+                    pdf = got.toPandas()
+                    # every posting row carries its own vector
+                    src = pdf.vec_id.map(vectors)
+                    assert all(
+                        np.array_equal(a, b, equal_nan=True)
+                        for a, b in zip(pdf.embedding, src)
+                    )
+                    got = pdf.drop(columns="embedding").itertuples(index=False)
+                else:
+                    got = got.collect()
+                got = sorted(tuple(r) for r in got)
+                assert got == want, (n_planes, n_tables, batch)
+    finally:
+        spark.conf.set(conf, old)
 
 
 def test_fixed_dot_pandas_equals_expr(spark, sf_dir):

@@ -8,7 +8,6 @@ import pytest
 from locopy_spark.errors import DBError, StageDeletionError
 from locopy_spark.sources.copy import add_default_copy_options, copy_files
 from locopy_spark.sources.dataframe_io import insert_dataframe_to_table
-from locopy_spark.sources.files import write_single, write_split
 from locopy_spark.sources.stage import (
     Stage,
     generate_unload_path,
@@ -145,15 +144,6 @@ def test_insert_dataframe(spark):
 def test_insert_empty_raises(spark):
     with pytest.raises(DBError):
         insert_dataframe_to_table(spark, pd.DataFrame(), "t_e")
-
-
-def test_write_split_and_single(spark, tmp_path):
-    df = spark.range(100).toDF("n")
-    parts = write_split(df, str(tmp_path / "s"), splits=4)
-    assert len(parts) == 4
-    one = write_single(df, str(tmp_path / "one"))
-    assert len(one) == 1
-    assert spark.read.csv(str(tmp_path / "one")).count() == 100
 
 
 def test_orc_round_trip(spark, tmp_path, sf_dir):

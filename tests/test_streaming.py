@@ -3068,10 +3068,9 @@ def test_stream_cochran_q_matches_batch(spark, sf_dir, tmp_path):
 
 
 def test_stream_ann_postings_matches_batch(spark, sf_dir, tmp_path):
-    """The live postings state must equal the batch signature table for
-    any chunking (fold signatures — bit-deterministic per row), and
-    serving knn_lsh THROUGH the streamed postings must equal the
-    batch fold-signature serving path exactly."""
+    """The live postings state must equal the batch SQL-fold signature
+    table for any chunking, and serving knn_lsh THROUGH the streamed
+    postings must equal the live batch serving path exactly."""
     from locopy_spark.operators.similarity import knn_lsh, lsh_signatures
     from locopy_spark.queries.docs import KNN_K, KNN_QUERY_IDS
     from locopy_spark.sources.tables import load_table
@@ -3087,7 +3086,7 @@ def test_stream_ann_postings_matches_batch(spark, sf_dir, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(tmp_path / "annchunk*"))
     )
-    q = stream_ann_postings(stream, state_view="annp_t", signatures="fold")
+    q = stream_ann_postings(stream, state_view="annp_t")
     try:
         q.processAllAvailable()
     finally:
@@ -3108,9 +3107,7 @@ def test_stream_ann_postings_matches_batch(spark, sf_dir, tmp_path):
     )
     batch = sorted(
         tuple(r)
-        for r in knn_lsh(
-            emb, query_ids=KNN_QUERY_IDS, k=KNN_K, signatures="fold"
-        ).collect()
+        for r in knn_lsh(emb, query_ids=KNN_QUERY_IDS, k=KNN_K).collect()
     )
     assert served == batch
 
